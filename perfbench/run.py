@@ -4,8 +4,10 @@ engine's public API and prints its metrics as the last stdout line.
     python3 perfbench/run.py --workload batch_resolve --seed 1 --seconds 1 --trace 0
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the same
-workload with layer spans and Spark's event log on, and prints the
-per-layer metrics.  Inputs are generated from ``--seed`` and cached under
+workload with Spark's event log on, times three ops with the middle one
+split into layer spans, then runs the workload's traced side path (see
+``perfbench/workloads.py``), and prints the per-layer metrics.  Inputs are
+generated from ``--seed`` and cached under
 ``.perfbench_work/inputs``; everything else a run writes lives in
 ``.perfbench_work/run-<pid>`` and is removed when the run ends.  The exit
 code is 1 if any op raised or failed its output check.
@@ -33,13 +35,24 @@ COUNTS = (
     ("pipeline.edges.matched", "count"),
     ("pipeline.edges.verify_yield", "frac"),
     ("cluster.components", "count"),
+    ("cluster.lp.hops", "count"),
+    ("cluster.lp.hits", "count"),
+    ("incremental.fold.delta_edges", "count"),
+    ("incremental.fold.relabeled_rows", "count"),
+    ("incremental.fold.compactions", "count"),
     ("dedup.fold.new_pairs", "count"),
     ("dedup.fold.compactions", "count"),
     ("io.stage_mb", "MB"),
     ("io.state_mb", "MB"),
+    ("io.resolver_state_mb", "MB"),
     ("trace.unattributed_s", "s"),
     ("trace.overhead_frac", "frac"),
 )
+# a traced run times ops 1..3 and traces op 2: the plain ops on both sides
+# bracket it, so trace.overhead_frac compares ops of the same kind with the
+# warm-up drift averaged out.  The event log is on for the whole traced
+# session, so the overhead is that of the spans, not of the event log.
+TRACED_OP, TRACED_RUN_OPS = 2, 3
 
 
 def cpu_ticks() -> tuple[int, int]:
@@ -55,6 +68,12 @@ def vm_hwm_mb(pid: int) -> float:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024.0
     raise RuntimeError(f"no VmHWM for pid {pid}")
+
+
+def reset_hwm(pid: int) -> None:
+    """restart the VmHWM peak of ``pid`` at its current resident size."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
 
 
 def ram_mb() -> int:
@@ -103,25 +122,6 @@ def box_session(run_dir: str, trace: bool):
     return spark, cores, heap_mb
 
 
-def quiesce(spark, max_s: float = 20.0) -> float:
-    """After the warm-up op: collect the JVM heap, then wait until the
-    JIT compiler has been idle for a second, so the timed op does not share
-    the cores with compilation the warm-up queued.  Returns the wait."""
-    t0 = time.perf_counter()
-    jvm = spark._jvm
-    jvm.java.lang.System.gc()
-    mx = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    deadline = time.perf_counter() + max_s
-    last = mx.getTotalCompilationTime()
-    while time.perf_counter() < deadline:
-        time.sleep(1.0)
-        now = mx.getTotalCompilationTime()
-        if now - last < 20:          # ms of compilation in the last second
-            break
-        last = now
-    return time.perf_counter() - t0
-
-
 def stop_session(spark) -> None:
     """Stop the session, then the JVM it started, and wait for it."""
     from pyspark import SparkContext
@@ -143,7 +143,7 @@ def stop_session(spark) -> None:
 def run(args) -> int:
     run_dir = os.path.join(WORK, f"run-{os.getpid()}")
     inputs = os.path.join(WORK, "inputs")
-    for d in ("tmp", "out", "spark-local"):
+    for d in ("tmp", "out/stages", "spark-local"):
         os.makedirs(os.path.join(run_dir, d), exist_ok=True)
     os.makedirs(inputs, exist_ok=True)
     # keep every file Spark, the JVM and the engine write inside the run dir
@@ -153,8 +153,8 @@ def run(args) -> int:
     # -XX:-UsePerfData: no hsperfdata file, which HotSpot puts in /tmp
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "spark-local")
-    # the engine's stage scratch; also the dedup state dir
-    os.environ["ZENTITY_LOCAL_DIR"] = os.path.join(run_dir, "out")
+    # the engine's stage scratch; the workloads' state dirs sit beside it
+    os.environ["ZENTITY_LOCAL_DIR"] = os.path.join(run_dir, "out", "stages")
     try:
         return measure(args, run_dir, inputs)
     finally:
@@ -163,10 +163,10 @@ def run(args) -> int:
 
 def measure(args, run_dir: str, inputs: str) -> int:
     from perfbench.trace import Tracer
-    from perfbench.workloads import WORKLOADS
+    from perfbench.workloads import SIDE_SPANS, WORKLOADS
 
     wl = WORKLOADS[args.workload](                     # input generation
-        inputs, args.seed, args.scale, os.environ["ZENTITY_LOCAL_DIR"])
+        inputs, args.seed, args.scale, os.path.join(run_dir, "out"))
 
     t0 = time.perf_counter()
     spark, cores, heap_mb = box_session(run_dir, bool(args.trace))
@@ -175,21 +175,23 @@ def measure(args, run_dir: str, inputs: str) -> int:
     attempted = 1
     try:
         wl.setup(spark)                                # incl. warm-up op
-        quiesce_s = quiesce(spark)
         setup_s = time.perf_counter() - t0
         failures += wl.check_setup()
         failed = 1 if failures else 0
 
         plain, traced, unattributed = [], [], []
+        # peak_rss_mb covers the timed phase only
+        jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+        for pid in (os.getpid(), jvm_pid):
+            reset_hwm(pid)
         st0, tt0 = cpu_ticks()
         start = time.perf_counter()
         i = 1
-        while i == 1 or (args.trace and i == 2) \
-                or time.perf_counter() - start < args.seconds:
+        while wl.has_op(i) and (
+                i <= TRACED_RUN_OPS if args.trace else i <= wl.min_ops
+                or time.perf_counter() - start < args.seconds):
             attempted += 1
-            # traced runs trace the op an untraced run times (the first)
-            # and time the next one plain, for trace.overhead_frac
-            use_trace = args.trace and i % 2 == 1
+            use_trace = args.trace and i == TRACED_OP
             try:
                 wall, errs = (wl.traced_op(i, tracer) if use_trace
                               else wl.op(i))
@@ -205,12 +207,19 @@ def measure(args, run_dir: str, inputs: str) -> int:
                 failed += 1
             i += 1
         st1, tt1 = cpu_ticks()
-        end_errs = wl.check_end()
+        hwm = {"python": vm_hwm_mb(os.getpid()), "jvm": vm_hwm_mb(jvm_pid)}
+        end_errs = []
+        if args.trace and not failures:
+            # the side path: after the timed phase, outside every op
+            attempted += 1
+            try:
+                end_errs += wl.side(tracer)
+            except Exception as e:                     # noqa: BLE001
+                end_errs.append(f"side path raised {type(e).__name__}: {e}")
+        end_errs += wl.check_end()
         if end_errs:
             failures += end_errs
             failed = min(attempted, failed + 1)
-        jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
-        peak_rss = vm_hwm_mb(os.getpid()) + vm_hwm_mb(jvm_pid)
         env = {
             "nproc": cores, "ram_mb": ram_mb(), "jvm_heap_mb": heap_mb,
             "shuffle_partitions": 2 * cores,
@@ -220,30 +229,32 @@ def measure(args, run_dir: str, inputs: str) -> int:
             "seed": args.seed, "scale": args.scale, "trace": args.trace,
             "steal_pct": 100.0 * (st1 - st0) / max(1, tt1 - tt0),
             "op_walls_s": plain, "traced_op_walls_s": traced,
-            "samples": len(plain), "quiesce_s": quiesce_s,
+            "samples": len(plain), "peak_rss_mb": hwm,
         }
     finally:
         stop_session(spark)
 
     if args.trace:
         tracer.attribute(os.path.join(run_dir, "eventlog"))
-        names = [s for c in WORKLOADS.values() for s in c.spans]
+        names = [s for c in WORKLOADS.values() for s in c.spans] \
+            + list(SIDE_SPANS)
         metrics = tracer.metrics(names, cores)
         counts = dict(wl.counts)
-        counts["trace.unattributed_s"] = (
-            statistics.median(unattributed) if unattributed else 0.0, "s")
-        counts["trace.overhead_frac"] = (
-            statistics.median(traced) / statistics.median(plain) - 1
-            if traced and plain else 0.0, "frac")
+        if unattributed:
+            counts["trace.unattributed_s"] = (
+                statistics.median(unattributed), "s")
+        if traced and plain:
+            counts["trace.overhead_frac"] = (
+                statistics.median(traced) / statistics.mean(plain) - 1,
+                "frac")
         for name, unit in COUNTS:
             metrics[name] = counts.get(name, (0.0, unit))
     else:
-        metrics = {
-            "setup_s": (setup_s, "s"),
-            "op_s_p50": (statistics.median(plain), "s"),
-            "peak_rss_mb": (peak_rss, "MB"),
-            "disk_mb_per_kdoc": (statistics.median(wl.disk), "MB"),
-        }
+        metrics = {"setup_s": (setup_s, "s"),
+                   "peak_rss_mb": (sum(hwm.values()), "MB")}
+        if plain:      # none if the only op raised: the run has failed
+            metrics |= {"op_s_p50": (statistics.median(plain), "s"),
+                        "disk_mb_per_kdoc": (statistics.median(wl.disk), "MB")}
     for f in failures:
         print("CHECK FAILED:", f, file=sys.stderr)
     print(json.dumps({"env": env}))

@@ -1,12 +1,12 @@
 """Smoke mode: run every workload once at the smallest scale (the
-sf0.001-sized person corpus, a 300-doc text corpus), traced and untraced,
+sf0.001-sized person corpus, a 400-doc text corpus), traced and untraced,
 and assert that every metric BENCHMARK.json names prints with its unit and
 that every output check passes.  Also asserts that the benchmark fails,
 without printing a result, in a directory that holds only the benchmark.
 
     python3 perfbench/smoke.py
 
-Takes about five minutes on a 4-core machine.
+Takes about six minutes on a 4-core machine.
 """
 
 from __future__ import annotations
