@@ -22,6 +22,7 @@ import shutil
 import statistics
 import sys
 import tempfile
+import threading
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -62,18 +63,45 @@ def cpu_ticks() -> tuple[int, int]:
     return (vals[7] if len(vals) > 7 else 0), sum(vals)
 
 
-def vm_hwm_mb(pid: int) -> float:
+def vm_rss_mb(pid: int) -> float:
     with open(f"/proc/{pid}/status") as f:
         for line in f:
-            if line.startswith("VmHWM:"):
+            if line.startswith("VmRSS:"):
                 return int(line.split()[1]) / 1024.0
-    raise RuntimeError(f"no VmHWM for pid {pid}")
+    raise RuntimeError(f"no VmRSS for pid {pid}")
 
 
-def reset_hwm(pid: int) -> None:
-    """restart the VmHWM peak of ``pid`` at its current resident size."""
-    with open(f"/proc/{pid}/clear_refs", "w") as f:
-        f.write("5")
+class RssPeak:
+    """Peak resident size of some processes over a phase: the maximum of
+    their VmRSS, sampled every ``EVERY_S`` seconds by a daemon thread.
+    VmHWM would cover the whole process life, and restarting it means
+    writing to /proc, outside the benchmark's own directory."""
+
+    EVERY_S = 0.05
+
+    def __init__(self, pids: dict):
+        self.pids = pids
+        self.peak = {name: 0.0 for name in pids}
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._loop, daemon=True)
+
+    def _sample(self) -> None:
+        for name, pid in self.pids.items():
+            self.peak[name] = max(self.peak[name], vm_rss_mb(pid))
+
+    def _loop(self) -> None:
+        while not self._stop.wait(self.EVERY_S):
+            self._sample()
+
+    def __enter__(self):
+        self._sample()
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._stop.set()
+        self._thread.join()
+        self._sample()
 
 
 def ram_mb() -> int:
@@ -182,32 +210,31 @@ def measure(args, run_dir: str, inputs: str) -> int:
         plain, traced, unattributed = [], [], []
         # peak_rss_mb covers the timed phase only
         jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
-        for pid in (os.getpid(), jvm_pid):
-            reset_hwm(pid)
-        st0, tt0 = cpu_ticks()
-        start = time.perf_counter()
-        i = 1
-        while wl.has_op(i) and (
-                i <= TRACED_RUN_OPS if args.trace else i <= wl.min_ops
-                or time.perf_counter() - start < args.seconds):
-            attempted += 1
-            use_trace = args.trace and i == TRACED_OP
-            try:
-                wall, errs = (wl.traced_op(i, tracer) if use_trace
-                              else wl.op(i))
-            except Exception as e:                     # noqa: BLE001
-                failures.append(f"op {i} raised {type(e).__name__}: {e}")
-                failed += 1
-                break
-            (traced if use_trace else plain).append(wall)
-            if use_trace:
-                unattributed.append(tracer.self_time(i, wall))
-            if errs:
-                failures += errs
-                failed += 1
-            i += 1
-        st1, tt1 = cpu_ticks()
-        hwm = {"python": vm_hwm_mb(os.getpid()), "jvm": vm_hwm_mb(jvm_pid)}
+        rss = RssPeak({"python": os.getpid(), "jvm": jvm_pid})
+        with rss:
+            st0, tt0 = cpu_ticks()
+            start = time.perf_counter()
+            i = 1
+            while wl.has_op(i) and (
+                    i <= TRACED_RUN_OPS if args.trace else i <= wl.min_ops
+                    or time.perf_counter() - start < args.seconds):
+                attempted += 1
+                use_trace = args.trace and i == TRACED_OP
+                try:
+                    wall, errs = (wl.traced_op(i, tracer) if use_trace
+                                  else wl.op(i))
+                except Exception as e:                 # noqa: BLE001
+                    failures.append(f"op {i} raised {type(e).__name__}: {e}")
+                    failed += 1
+                    break
+                (traced if use_trace else plain).append(wall)
+                if use_trace:
+                    unattributed.append(tracer.self_time(i, wall))
+                if errs:
+                    failures += errs
+                    failed += 1
+                i += 1
+            st1, tt1 = cpu_ticks()
         end_errs = []
         if args.trace and not failures:
             # the side path: after the timed phase, outside every op
@@ -229,7 +256,7 @@ def measure(args, run_dir: str, inputs: str) -> int:
             "seed": args.seed, "scale": args.scale, "trace": args.trace,
             "steal_pct": 100.0 * (st1 - st0) / max(1, tt1 - tt0),
             "op_walls_s": plain, "traced_op_walls_s": traced,
-            "samples": len(plain), "peak_rss_mb": hwm,
+            "samples": len(plain), "peak_rss_mb": rss.peak,
         }
     finally:
         stop_session(spark)
@@ -251,7 +278,7 @@ def measure(args, run_dir: str, inputs: str) -> int:
             metrics[name] = counts.get(name, (0.0, unit))
     else:
         metrics = {"setup_s": (setup_s, "s"),
-                   "peak_rss_mb": (sum(hwm.values()), "MB")}
+                   "peak_rss_mb": (sum(rss.peak.values()), "MB")}
         if plain:      # none if the only op raised: the run has failed
             metrics |= {"op_s_p50": (statistics.median(plain), "s"),
                         "disk_mb_per_kdoc": (statistics.median(wl.disk), "MB")}

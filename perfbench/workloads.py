@@ -58,7 +58,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 MB = float(1 << 20)
 
 # person-corpus size (persons; ~4 docs each) and text-corpus shape
-PERSONS = {"full": 1500, "smoke": 150}
+PERSONS = {"full": 1000, "smoke": 150}
 TEXT_DOCS = {"full": 2000, "smoke": 400}
 TEXT_INCREMENT = 100
 # compact the dedup state on every fold: the base after the bootstrap fold
